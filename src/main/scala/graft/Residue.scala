@@ -31,6 +31,10 @@ import org.apache.spark.storage.StorageLevel
   *    wrapped back into a DataFrame — a LogicalRDD leaf, O(1) analysis per
   *    round — and the handle frees the round's blocks as soon as its
   *    successor is materialized, capping in-loop state at two generations.
+  *  - [[persist]]/[[release]]: the same tracked, freeable persistence
+  *    for plain RDDs, for iterative operators that run their rounds on
+  *    RDDs directly (no per-round query planning at all) — each
+  *    generation is released as soon as its successor is materialized.
   *  - [[drain]]: called by `Bench`/`Verify` after every query run (and by
   *    any long-lived session between jobs): blocking-unpersists everything
   *    still tracked, then sweeps `SparkContext.getPersistentRDDs` and
@@ -55,14 +59,24 @@ object Residue {
     ds
   }
 
+  /** Lazily persist `rdd` (MEMORY_AND_DISK_SER) and track it for [[drain]]. */
+  def persist[T](rdd: RDD[T]): RDD[T] = {
+    rdd.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    rdds.add(rdd)
+    rdd
+  }
+
+  /** Release `rdd`'s blocks and stop tracking it. Lineage stays intact, so
+    * a lost executor (or a late re-read) recomputes instead of failing. */
+  def release(rdd: RDD[_]): Unit = {
+    rdd.unpersist(blocking = false)
+    rdds.remove(rdd)
+  }
+
   /** A freeable, lineage-truncated materialization for iterative loops. */
   final class Cut private[Residue] (val df: DataFrame, rdd: RDD[Row]) {
-    /** Release this generation's blocks. Lineage stays intact, so a lost
-      * executor (or a late re-read) recomputes instead of failing. */
-    def free(): Unit = {
-      rdd.unpersist(blocking = false)
-      rdds.remove(rdd)
-    }
+    /** Release this generation's blocks (see [[release]]). */
+    def free(): Unit = release(rdd)
   }
 
   /** Persist `df`'s row RDD (MEMORY_AND_DISK_SER) and wrap it back into a
@@ -70,24 +84,10 @@ object Residue {
     * until the first action, so bench timings stay honest.
     */
   def cut(df: DataFrame): Cut = {
-    val rdd = df.rdd
-    rdd.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    rdds.add(rdd)
+    val rdd = persist(df.rdd)
     new Cut(df.sparkSession.createDataFrame(rdd, df.schema), rdd)
   }
 
-  /** Blocking-release everything tracked, then sweep the session for ANY
-    * persisted RDD that remains. Returns one description per stray (empty =
-    * clean); strays are force-freed after being named.
-    *
-    * A BETWEEN-JOBS operation: call it when no query is in flight (as
-    * Bench/Verify/the specs do, between queries). Draining while another
-    * thread's query is mid-execution would release that query's pins —
-    * harmless for correctness (persist is a cache, lineage recomputes) but
-    * it would silently re-derive work. Intra-query thread fan-out
-    * (ParallelReports) is fine: the fan-out completes before the caller
-    * returns, so its pins are quiescent by drain time.
-    */
   /** Post-drain pressure snapshot: (JVM heap live-set MB, block-manager
     * storage-memory used MB). The drain frees everything THIS registry
     * tracks, but broadcast blocks, shuffle files, and streaming state
@@ -111,6 +111,18 @@ object Residue {
     (heapMb, storageMb)
   }
 
+  /** Blocking-release everything tracked, then sweep the session for ANY
+    * persisted RDD that remains. Returns one description per stray (empty =
+    * clean); strays are force-freed after being named.
+    *
+    * A BETWEEN-JOBS operation: call it when no query is in flight (as
+    * Bench/Verify/the specs do, between queries). Draining while another
+    * thread's query is mid-execution would release that query's pins —
+    * harmless for correctness (persist is a cache, lineage recomputes) but
+    * it would silently re-derive work. Intra-query thread fan-out
+    * (ParallelReports) is fine: the fan-out completes before the caller
+    * returns, so its pins are quiescent by drain time.
+    */
   def drain(spark: SparkSession): Seq[String] = {
     var ds = pinned.poll()
     while (ds != null) { ds.unpersist(blocking = true); ds = pinned.poll() }

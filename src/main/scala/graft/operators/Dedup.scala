@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.Residue
 import graft.functions.GraftFunctions._
 import graft.functions.PolyHash
@@ -369,49 +373,94 @@ object Dedup {
 
   /** Connected components over near-dup pairs: every doc that appears in
     * a pair gets `cluster_id` = min doc_id of its component (the cluster
-    * representative a dedup pipeline keeps). Iterative min-label
-    * propagation: each round is one shuffle (join + min-agg) and the loop
-    * runs O(component diameter) rounds — near-dup components are shallow
-    * in practice, and the per-round state is one (doc, label) row per
-    * node, never the pair set.
+    * representative a dedup pipeline keeps).
+    *
+    *  1. Contract: one `mapPartitions` pass runs a local union-find
+    *     (union by min root, path compression) over each partition's pairs
+    *     and emits `(node, local root)` — a star forest spanning the same
+    *     components, so in-partition structure costs no global round (the
+    *     large-star/small-star idea of Kiveris et al., SoCC 2014).
+    *  2. Propagate: min-label rounds with path halving
+    *     (label(x) := label(label(x)), O(log diameter) rounds) on RDDs that
+    *     share one `HashPartitioner`, so the edge-label join is narrow and
+    *     a round is three shuffles with no query planning.
+    *  3. Converge: each round's labels carry their own changed flag, so
+    *     the round's only action is a count over that persisted RDD — one
+    *     Spark job per round.
+    *
+    * In-loop state is the star edges plus two label generations
+    * ([[graft.Residue.persist]]), node-sized, never the pair set, and
+    * nothing is collected to the driver. Jobs are described
+    * `Dedup.nearDupClusters contract` / `... round <k>`.
     */
   def nearDupClusters(pairs: DataFrame): DataFrame = {
-    val fwd = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
-    // Residue.cut (not cache, not localCheckpoint): iterative plans
-    // otherwise embed the whole upstream pair-generation lineage every
-    // round — analysis time, not data, becomes the cost — and checkpoint
-    // blocks can never be freed, contaminating every query that runs after
-    // this one in the same session (the r6 suite-bench failure mode). Each
-    // generation is released as soon as its successor is materialized by
-    // the convergence count, so peak in-loop state is two node-sized tables.
-    val edges = Residue.cut(fwd
-      .union(fwd.select(col("b"), col("a")))
-      .union(fwd.select(col("a"), col("a")))
-      .union(fwd.select(col("b"), col("b")))
-      .distinct())
-    var labels = Residue.cut(edges.df.groupBy(col("a").as("doc_id"))
-      .agg(min(col("b")).as("cluster_id")))
-    var changed = 1L
-    while (changed > 0) {
-      // one hop: label(x) = min over neighbors of label(neighbor)
-      val hop = Residue.cut(
-        edges.df.join(labels.df, edges.df("b") === labels.df("doc_id"))
-          .groupBy(edges.df("a").as("doc_id"))
-          .agg(min(col("cluster_id")).as("cluster_id")))
-      // path halving: label(x) = label(label(x)) — labels are doc ids in
-      // the same graph, so the inner self-join always hits; this turns
-      // O(diameter) rounds into O(log diameter)
-      val prop = Residue.cut(hop.df.as("p1")
-        .join(hop.df.as("p2"), col("p1.cluster_id") === col("p2.doc_id"))
-        .select(col("p1.doc_id").as("doc_id"), col("p2.cluster_id").as("cluster_id")))
-      changed = prop.df
-        .join(labels.df.withColumnRenamed("cluster_id", "prev"), "doc_id")
-        .filter(col("cluster_id") =!= col("prev")).count()
-      hop.free(); labels.free()
-      labels = prop
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val part = new HashPartitioner(sc.defaultParallelism)
+    // doc_id keeps the ids' nullability; cluster_id is a nullable min
+    val outSchema = StructType(Seq(
+      StructField("doc_id", LongType, Seq("id_a", "id_b").exists(pairs.schema(_).nullable)),
+      StructField("cluster_id", LongType, nullable = true)))
+    val callerDesc = sc.getLocalProperty(JobDescription)
+    try {
+      sc.setJobDescription("Dedup.nearDupClusters contract")
+      val stars = pairs.where(col("id_a").isNotNull && col("id_b").isNotNull)
+        .select(col("id_a"), col("id_b")).as[(Long, Long)].rdd
+        .mapPartitions(localComponents)
+      // undirected star edges as adjacency; a root lists itself, so a
+      // self-pair's lone node still gets a row
+      val adj = Residue.persist(stars
+        .flatMap { case (n, r) => if (n == r) Iterator((n, n)) else Iterator((n, r), (r, n)) }
+        .groupByKey(part).mapValues(_.toArray.distinct))
+      // label = (cluster_id, changed in the round that produced it)
+      var labels = Residue.persist(adj.mapPartitions(_.map { case (n, ns) =>
+        (n, (math.min(n, ns.min), true)) }, preservesPartitioning = true))
+      // the contraction job: materializes the star edges and first labels
+      var changed = labels.count()
+      var round = 0
+      while (changed > 0) {
+        round += 1
+        sc.setJobDescription(s"Dedup.nearDupClusters round $round")
+        // one hop: label(x) = min(label(x), label of every neighbor)
+        val hop = adj.join(labels, part)
+          .flatMap { case (n, (ns, (l, _))) => Iterator((n, l)) ++ ns.iterator.map((_, l)) }
+          .reduceByKey(part, math.min(_, _))
+        // path halving: label(x) = hop(hop(x)) — labels are node ids in the
+        // same graph, so the lookup always hits
+        val next = Residue.persist(hop.map(_.swap).join(hop, part)
+          .map { case (_, (n, l)) => (n, l) }
+          .join(labels, part)
+          .mapValues { case (l, (prev, _)) => (l, l != prev) })
+        changed = next.filter(_._2._2).count()
+        Residue.release(labels)
+        labels = next
+      }
+      Residue.release(adj)
+      spark.createDataFrame(labels.map { case (n, (l, _)) => Row(n, l) }, outSchema)
+    } finally sc.setLocalProperty(JobDescription, callerDesc)
+  }
+
+  /** The local property `SparkContext.setJobDescription` sets. */
+  private val JobDescription = "spark.job.description"
+
+  /** One partition's pairs → `(node, root)` for every node seen, root =
+    * the minimum node of its partition-local component. */
+  private def localComponents(pairs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
     }
-    edges.free()
-    labels.df
+    pairs.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.iterator.map(n => (n, find(n)))
   }
 
   /** Quality-aware retention: from each near-dup cluster keep the BEST

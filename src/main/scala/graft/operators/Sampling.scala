@@ -76,8 +76,9 @@ object Sampling {
     * own representative), so the whole component moves together and
     * cross-split near-dup pairs are zero by construction.
     *
-    * Scale shape: clustering is the label-propagation already bounded in
-    * [[Dedup.nearDupClusters]] (node-sized state, O(log diameter) rounds);
+    * Scale shape: clustering is [[Dedup.nearDupClusters]] — a
+    * per-partition union-find contraction, then O(log diameter) RDD
+    * rounds of one Spark job each over node-sized state, no driver collect;
     * the label join is one equi-join shuffle on doc_id (the pairs side
     * only has rows for docs IN a pair — the 100 TB corpus's singleton
     * majority short-circuits through the coalesce); the split itself is

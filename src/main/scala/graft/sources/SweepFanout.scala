@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.spark.sql.SparkSession
+
 /** Driver-thread fan-out for era-boundary SWEEPS (r17): a recall sweep
   * evaluates a handful of independent (nprobe / shortlist) settings, each
   * one a small chain of Spark jobs ending in a metadata-sized collect —
@@ -25,9 +27,11 @@ private[graft] object SweepFanout {
       // pool capped at the session's parallelism (r17 verdict #4): a
       // sweep grid wider than the core count gains nothing from more
       // in-flight jobs than cores — excess settings queue and overlap in
-      // waves. `active` is the session the settings' jobs run on.
+      // waves. The settings' jobs run on the active (else default)
+      // session; with neither, the cap degrades to one thread per item.
       val cap = math.min(items.size,
-        org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
+        SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+          .map(_.sparkContext.defaultParallelism).getOrElse(items.size))
       val executor =
         java.util.concurrent.Executors.newFixedThreadPool(cap.max(1))
       implicit val ec: scala.concurrent.ExecutionContext =

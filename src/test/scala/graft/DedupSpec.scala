@@ -192,6 +192,98 @@ class DedupSpec extends SparkSuite {
     assert(got.forall(_._2 == 1L))
   }
 
+  /** Driver-side reference: min doc id of each node's component. */
+  private def referenceClusters(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(n => n -> find(n)).toMap
+  }
+
+  /** nearDupClusters over `pairs` spread across 4 partitions equals the
+    * reference, with exactly one row per doc. */
+  private def assertClustersMatchReference(pairs: Seq[(Long, Long)]): Unit = {
+    val spread = pairs.toDF("id_a", "id_b").repartition(4)
+    assert(spread.rdd.getNumPartitions >= 4)
+    val got = Dedup.nearDupClusters(spread).as[(Long, Long)].collect()
+    assert(got.map(_._1).distinct.length === got.length, "one row per doc")
+    assert(got.toMap === referenceClusters(pairs))
+  }
+
+  test("near-dup clustering equals a driver-side union-find on seeded random graphs") {
+    (1 to 6).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((1L to 2000L).toVector).take(300)
+      // sparse random graph: many small components and some larger ones
+      val pairs = Seq.fill(220)((ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size))))
+      assertClustersMatchReference(pairs)
+    }
+  }
+
+  test("near-dup clustering: shuffled long chain, star, duplicate/reversed pairs, self-pairs") {
+    val rnd = new scala.util.Random(7)
+    // a 240-node chain over shuffled ids, edges in random order and
+    // orientation: the diameter spans every partition
+    val chainIds = rnd.shuffle((1000L until 1240L).toVector)
+    val chain = rnd.shuffle(chainIds.sliding(2).map { case Seq(a, b) =>
+      if (rnd.nextBoolean()) (a, b) else (b, a) }.toVector)
+    assertClustersMatchReference(chain)
+    // a star whose center is not the component minimum
+    val star = rnd.shuffle((1L to 60L).filter(_ != 30L).map(leaf => (30L, leaf)))
+    assertClustersMatchReference(star)
+    // every pair repeated and reversed
+    val base = Seq((5L, 9L), (9L, 12L), (40L, 41L), (3L, 41L))
+    assertClustersMatchReference(rnd.shuffle(base ++ base ++ base.map(_.swap)))
+    // self-pairs: on a node with other edges, and an isolated one
+    assertClustersMatchReference(Seq((7L, 7L), (7L, 8L), (8L, 8L), (77L, 77L)))
+  }
+
+  test("near-dup clustering: empty input gives an empty frame; schema is (doc_id long, cluster_id long)") {
+    import org.apache.spark.sql.types.LongType
+    val empty = Dedup.nearDupClusters(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    assert(empty.collect().isEmpty)
+    val filled = Dedup.nearDupClusters(Seq((1L, 2L)).toDF("id_a", "id_b"))
+    Seq(empty, filled).foreach { df =>
+      assert(df.schema.map(f => (f.name, f.dataType)) ===
+        Seq(("doc_id", LongType), ("cluster_id", LongType)))
+    }
+  }
+
+  test("near-dup clustering names its contraction and round jobs and restores the caller's description") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descriptions.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("caller")
+      val chain = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b").repartition(4)
+      val clusters = Dedup.nearDupClusters(chain)
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      assert(clusters.count() === 40L) // the caller's own job
+      eventually(timeout(10.seconds)) {
+        val seen = descriptions.toArray.toSeq.map(_.toString)
+        assert(seen.contains("Dedup.nearDupClusters contract"), seen)
+        assert(seen.contains("Dedup.nearDupClusters round 1"), seen)
+        assert(seen.last === "caller", seen)
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+    }
+  }
+
   test("embedding pairs: brute force finds planted near-dup, bucketed path is a subset") {
     val emb = Seq(
       (1L, Seq.fill(64)(1.0f)),

@@ -207,6 +207,22 @@ class FleetSpec extends SparkSuite {
       s"sweep fan-out ran ${maxSeen.get} settings concurrently on a $par-core session")
   }
 
+  test("SweepFanout runs every setting when no session is active or default") {
+    import org.apache.spark.sql.SparkSession
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      graft.sources.SweepFanout.foreach(1 to 3)(i => { seen.add(i); () })
+      assert(seen.toArray.toSeq.sortBy(_.asInstanceOf[Int]) === Seq(1, 2, 3))
+    } finally {
+      default.foreach(SparkSession.setDefaultSession)
+      active.foreach(SparkSession.setActiveSession)
+    }
+  }
+
   test("inverted/lsh fragment arithmetic matches the generational layout") {
     val docs = Tables.documents(spark, sf).filter(col("doc_id") % 10 === 0)
       .select(col("doc_id"), col("text"))

@@ -30,6 +30,18 @@ class ResidueSpec extends SparkSuite {
     assert(persistentCount === 0)
   }
 
+  test("persist: a plain RDD is tracked until release or drain frees it") {
+    val kept = Residue.persist(spark.sparkContext.parallelize(1L to 30L, 3))
+    assert(kept.count() === 30L)
+    assert(persistentCount === 1)
+    Residue.release(kept)
+    assert(persistentCount === 0)
+    val drained = Residue.persist(spark.sparkContext.parallelize(1L to 30L, 3))
+    assert(drained.count() === 30L)
+    assert(Residue.drain(spark).isEmpty) // tracked != leaked
+    assert(persistentCount === 0)
+  }
+
   test("pin: materialization is released by drain, none survives") {
     val pinned = Residue.pin((1L to 50L).toDF("n"))
     assert(pinned.count() === 50L) // materialize the cache
@@ -56,11 +68,16 @@ class ResidueSpec extends SparkSuite {
 
   test("guard is silent on the engine's own operators") {
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    // exercise one pin site (triangleCounts) and one cut loop
+    // exercise one pin site (triangleCounts) and one persist loop
     // (nearDupClusters) end-to-end, consuming the results fully
     val pairs = operators.Dedup.minhashLshPairs(docs, 3, 16, 4, 0.6)
     assert(operators.Graph.triangleCounts(pairs).count() >= 0)
     assert(operators.Dedup.nearDupClusters(pairs).count() >= 0)
+    // the RDD fixpoint over pairs spread across partitions: components
+    // cross partition boundaries, so the loop runs real rounds
+    val spread = pairs.repartition(4)
+    assert(spread.rdd.getNumPartitions >= 4)
+    assert(operators.Dedup.nearDupClusters(spread).collect().nonEmpty)
     val leaks = Residue.drain(spark)
     assert(leaks.isEmpty, leaks.mkString("; "))
     assert(persistentCount === 0)
