@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.DataSourceScanExec
 import org.apache.spark.sql.functions.{col, unix_micros, unix_timestamp}
 import org.apache.spark.sql.types.StructType
 
@@ -95,12 +96,28 @@ object Tables {
     * and free of round-robin's local sort-before-repartition, which
     * would itself run inside the one hot task this helper exists to
     * relieve.
+    *
+    * The split count is read off the planned physical scan
+    * ([[scanSplits]]), not `df.rdd`: `df.rdd` starts a SQL execution,
+    * which runs upstream AQE exchanges and completes any `Observation` on
+    * the frame before a row is read.
     */
   def spread(df: DataFrame, key: Column): DataFrame = {
-    val spark = df.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par, key) else df
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    if (scanSplits(df) < par) df.repartition(par, key) else df
   }
+
+  /** Input splits of the widest leaf scan in `df`'s physical plan. Builds
+    * the scan's input RDD (file listing and split packing, as a job would)
+    * but starts no Spark job and no SQL execution. For a scan followed by
+    * narrow operators — every [[spread]] call site — this is the frame's
+    * partition count.
+    */
+  private[graft] def scanSplits(df: DataFrame): Int =
+    df.queryExecution.sparkPlan.collectLeaves().map {
+      case scan: DataSourceScanExec => scan.inputRDDs().map(_.getNumPartitions).sum
+      case leaf => leaf.outputPartitioning.numPartitions
+    }.foldLeft(0)(math.max)
 
   /** Epoch-second event time from `events.ts` — the ONE place the engine
     * derives seconds from the driver's timestamp encoding, so a driver-side

@@ -1,6 +1,8 @@
 package graft.operators
 
+import java.util.UUID
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, max}
 import graft.Tables
 import graft.sources.{BookmarkStore, IncrementalReader}
 
@@ -17,6 +19,22 @@ import graft.sources.{BookmarkStore, IncrementalReader}
   * that remains (one sink succeeded, the other failed, rerun re-feeds
   * both) is documented; idempotent sinks (preactions + dedup keys, or
   * staging tables) close it.
+  *
+  * ONE scan of the delta per run. The bookmark-filtered fact is observed
+  * (`Dataset.observe`: max key and row count) before the star join, inside
+  * the plan that fills the shared star cache; once both reports are done
+  * the run reads that metric back from the cached plan and commits its max
+  * key. There is no `maxKey` pre-scan and no `count()` rescan. So:
+  *   - the run commits the max key actually fed to the reports. Rows whose
+  *     foreign keys match no dimension row are observed before the inner
+  *     join drops them, so they count and move the bookmark;
+  *   - if nothing was consumed (an empty delta, or sinks that read
+  *     nothing) the run commits nothing and reports `rowsRead` = 0;
+  *   - `rowsRead` is exact unless a cached partition is recomputed (an
+  *     evicted block, a retried task), which counts its rows again. The
+  *     commit uses the max, which a recomputation cannot change.
+  * The metric name is unique per run, so a leftover or concurrent cache of
+  * the same delta never matches this run's plan.
   */
 object IncrementalStarJob {
 
@@ -30,8 +48,9 @@ object IncrementalStarJob {
           ctx: String = "star_job")(sink: (String, DataFrame) => Unit): RunResult = {
     val reader = new IncrementalReader(spark, sfDir, store)
     val keyCol = Tables.bookmarkKey("lineitem")
+    val metric = s"star_delta_${UUID.randomUUID()}"
     val delta = reader.read("lineitem", ctx)
-    val newMax = reader.maxKey(delta, keyCol)
+      .observe(metric, max(col(keyCol)).cast("long").as("max_key"), count(lit(1)).as("rows"))
     val denorm = StarPipeline.denormalizedFrom(delta,
       Tables.supplier(spark, sfDir), Tables.part(spark, sfDir)).cache()
     try {
@@ -47,9 +66,12 @@ object IncrementalStarJob {
           r
         }))
       val results = ParallelReports.run(spark, denorm, specs)(identity)
+      // both report jobs are done, so every task's metric update is merged
+      val seen = denorm.queryExecution.observedMetrics.get(metric)
+      val newMax = seen.filterNot(_.isNullAt(0)).map(_.getLong(0))
       // both sinks succeeded -> safe to advance the bookmark
       newMax.foreach(store.commit("lineitem", ctx, _))
-      RunResult(delta.count(), newMax, results.map(_._1))
+      RunResult(seen.fold(0L)(_.getLong(1)), newMax, results.map(_._1))
     } finally denorm.unpersist(blocking = true)
   }
 }

@@ -153,42 +153,53 @@ final class IncrementalReader(spark: SparkSession, sfDir: String, store: Bookmar
     * warehouse ships only the delta; the engine never transfers, then
     * discards, already-processed rows.
     *
+    * The window is closed at a high-water mark: one driver-side
+    * `MIN/MAX` round trip, made before any data is read, fixes `hw`, and
+    * the frame carries `key <= hw` (pushed as `*LessThanOrEqual`). The
+    * frame is lazy and every action re-queries the live table, so without
+    * the bound a row inserted between the sink's read and a later
+    * [[maxKey]] would be committed without ever being delivered. An empty
+    * table reads as an empty frame.
+    *
     * `numPartitions > 1` splits the read into range-parallel queries on the
-    * bookmark key (Glue's `hashpartitions`): bounds come from one O(1)
-    * driver-side `MIN/MAX` round trip, the lower bound starting at the
-    * bookmark so stride covers the DELTA, not dead key space below it.
+    * bookmark key (Glue's `hashpartitions`) over the same bounds, the lower
+    * bound starting at the bookmark so stride covers the DELTA, not dead
+    * key space below it.
     */
   def readJdbc(url: String, table: String, keyCol: String, ctx: String,
                props: Properties = new Properties(),
                numPartitions: Int = 1,
                fullRefresh: Boolean = false): DataFrame = {
     val last = if (fullRefresh) None else store.get(table, ctx)
-    val base =
-      if (numPartitions <= 1) spark.read.jdbc(url, table, props)
-      else {
-        val q = org.apache.spark.sql.jdbc.JdbcDialects.get(url)
-          .quoteIdentifier(keyCol)
-        val conn = java.sql.DriverManager.getConnection(url, props)
-        val (lo, hi) =
-          try {
-            val rs = conn.createStatement()
-              .executeQuery(s"SELECT MIN($q), MAX($q) FROM $table")
-            rs.next()
-            (math.max(rs.getLong(1), last.map(_ + 1).getOrElse(Long.MinValue)),
-              rs.getLong(2))
-          } finally conn.close()
-        if (lo >= hi) spark.read.jdbc(url, table, props) // empty/1-row delta
-        else spark.read.jdbc(url, table, keyCol, lo, hi, numPartitions, props)
-      }
-    last match {
-      case Some(l) => base.filter(col(keyCol) > lit(l))
-      case None => base
+    val q = org.apache.spark.sql.jdbc.JdbcDialects.get(url).quoteIdentifier(keyCol)
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    val bounds =
+      try {
+        val rs = conn.createStatement()
+          .executeQuery(s"SELECT MIN($q), MAX($q) FROM $table")
+        rs.next()
+        val min = rs.getLong(1)
+        if (rs.wasNull()) None else Some((min, rs.getLong(2)))
+      } finally conn.close()
+    bounds match {
+      case None => spark.read.jdbc(url, table, props).where(lit(false)) // empty table
+      case Some((min, hw)) =>
+        val lo = math.max(min, last.map(_ + 1).getOrElse(Long.MinValue))
+        val base =
+          if (numPartitions > 1 && lo < hw)
+            spark.read.jdbc(url, table, keyCol, lo, hw, numPartitions, props)
+          else spark.read.jdbc(url, table, props) // one query: unsplit, or an empty/1-row delta
+        val window = col(keyCol) <= lit(hw)
+        base.filter(last.fold(window)(l => col(keyCol) > lit(l) && window))
     }
   }
 
   /** Max key actually present in a (filtered) frame — the value to commit.
-    * Columnar max over the delta only; at scale this folds to parquet
-    * footer stats after pushdown.
+    * An aggregate job over the frame: a filtered parquet scan reads every
+    * delta row (row-group stats only skip whole groups below the bookmark),
+    * and a JDBC frame re-queries the source, so callers that already scan
+    * the delta should take the max from that scan instead
+    * ([[graft.operators.IncrementalStarJob]] observes it).
     */
   def maxKey(df: DataFrame, keyCol: String): Option[Long] =
     df.agg(max(col(keyCol)).cast("long")).collect()(0) match {

@@ -102,6 +102,9 @@ class BookmarkSpec extends SparkSuite {
     // the remote WHERE clause, not a post-transfer Spark filter
     assert(plan.contains("PushedFilters") && plan.contains("*GreaterThan(event_id,2)"),
       s"expected source-evaluated JDBC pushdown in plan:\n$plan")
+    // the high-water mark read before the data closes the window remotely
+    assert(plan.contains("*LessThanOrEqual(event_id,10)"),
+      s"expected the high-water bound pushed into the remote WHERE:\n$plan")
     assert(delta.select($"event_id").as[Long].collect().sorted.toSeq == (3L to 10L))
 
     // range-parallel delta read: same rows, one partition per key stride,
@@ -112,6 +115,41 @@ class BookmarkSpec extends SparkSuite {
 
     // full refresh bypasses the bookmark over JDBC too
     assert(reader.readJdbc(url, "t", "event_id", "j", fullRefresh = true).count() == 10)
+  }
+
+  test("a row inserted after the sink read is not committed; the next run delivers it once") {
+    val store = freshStore()
+    val tmp = Files.createTempDirectory("bm-hw").toString
+    val url = s"jdbc:derby:$tmp/db;create=true"
+    (1L to 10L).map(i => (i, s"p$i")).toDF("event_id", "payload")
+      .write.jdbc(url, "t", new java.util.Properties())
+    val reader = new IncrementalReader(spark, sf, store)
+    val delivered = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def run(): Option[Long] = {
+      val delta = reader.readJdbc(url, "t", "event_id", "w")
+      delivered ++= delta.select($"event_id").as[Long].collect()
+      val conn = java.sql.DriverManager.getConnection(url)
+      try conn.createStatement().execute(
+        s"INSERT INTO t VALUES (${delivered.max + 1}, 'late')")
+      finally conn.close()
+      // the frame re-queries the live table, which now holds one more row
+      val committed = reader.maxKey(delta, "event_id")
+      committed.foreach(store.commit("t", "w", _))
+      committed
+    }
+    assert(run().contains(10L))
+    assert(run().contains(11L))
+    assert(delivered.sorted.toSeq == (1L to 11L), "every row delivered exactly once")
+
+    // parquet: the delta's file listing is fixed when the frame is made,
+    // so a file appended after the read is not committed either
+    val dir = Files.createTempDirectory("bm-hw-pq").toString
+    Seq(1L, 2L).toDF("k").write.parquet(s"$dir/t.parquet")
+    val pq = new IncrementalReader(spark, dir, store)
+    val delta = pq.read("t", "k", "p")
+    assert(delta.as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    Seq(3L).toDF("k").write.mode("append").parquet(s"$dir/t.parquet")
+    assert(pq.maxKey(delta, "k").contains(2L))
   }
 
   test("bookmark predicate is pushed to the parquet scan") {
